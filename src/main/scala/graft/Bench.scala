@@ -117,8 +117,9 @@ object Bench {
   /** Committed per-query closing HISTORY — the stall/wave gates'
    *  baseline. Returns (mismatch, per-query map). `mismatch` means a
    *  history exists but was recorded under a DIFFERENT regime — another
-   *  scale factor, or (since r17) another core count — so it can
-   *  neither gate this run nor be overwritten by it. The r16 driver
+   *  scale factor, or (since r17) another core count — or cannot be
+   *  read at all, so it can neither gate this run nor be overwritten by
+   *  it. The r16 driver
    *  sequence ran the full catalog at 8 cores AFTER the 32-core record
    *  and landed itself as latest.json; most of the scheduling-bound
    *  class runs FASTER at 8 cores at this SF, so that record would
@@ -152,8 +153,9 @@ object Bench {
         }.getOrElse(Map.empty))
       }
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not read history $histFile: $e")
-      (false, Map.empty)
+      System.err.println(s"[bench] could not read history $histFile: $e — " +
+        "running without a history gate (and not landing over it)")
+      (true, Map.empty)
     }
 
   def main(args: Array[String]): Unit = {

@@ -1,9 +1,9 @@
 package graft
 
-import graft.functions.VectorExpressions
+import graft.functions.{UdfRegistry, VectorRewriteRule}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /**
  * SparkSessionExtensions entry point, for sessions built outside the
@@ -13,62 +13,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  * // or
  * SparkSession.builder().withExtensions(new GraftExtensions) ...
  * }}}
- * Injects the native vector expressions as SQL functions. (Sessions driven
- * by the PipelineRunner get these automatically via UdfRegistry.)
+ * Injects [[UdfRegistry.nativeFunctions]] as SQL functions and the
+ * [[VectorRewriteRule]] optimizer rule. (Sessions driven by the
+ * PipelineRunner get these automatically via UdfRegistry.)
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VectorExpressions.ArrayDotProduct].getName, "vec_dot"),
-      (es: Seq[Expression]) => VectorExpressions.ArrayDotProduct(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[VectorExpressions.ArrayL2Norm].getName, "vec_norm"),
-      (es: Seq[Expression]) => VectorExpressions.ArrayL2Norm(es.head)))
-    e.injectFunction((FunctionIdentifier("zorder_key"),
-      new ExpressionInfo(classOf[graft.functions.ZOrderExpression.ZOrderKey].getName, "zorder_key"),
-      (es: Seq[Expression]) => graft.functions.ZOrderExpression.sqlBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_hll"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.HllDistinct].getName, "graft_hll"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.hllBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_kll"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.KllQuantiles].getName, "graft_kll"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.kllBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_hll_state"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.HllState].getName, "graft_hll_state"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.hllStateBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_hll_merge"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.HllMergeEstimate].getName, "graft_hll_merge"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.hllMergeBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_kll_state"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.KllState].getName, "graft_kll_state"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.kllStateBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_kll_merge"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.KllMergeQuantiles].getName, "graft_kll_merge"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.kllMergeBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_bloom_state"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.BloomState].getName, "graft_bloom_state"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.bloomStateBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_bloom_merge"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.BloomMergeState].getName, "graft_bloom_merge"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.bloomMergeBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.BloomContains].getName, "graft_bloom_contains"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.bloomContainsBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_cms_state"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.CmsState].getName, "graft_cms_state"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.cmsStateBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_cms_merge"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.CmsMergeState].getName, "graft_cms_merge"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.cmsMergeBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_cms_count"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.CmsCount].getName, "graft_cms_count"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.cmsCountBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_bottomk"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.BottomKSample].getName, "graft_bottomk"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.bottomKBuilder(es)))
-    e.injectFunction((FunctionIdentifier("graft_topk_pairs"),
-      new ExpressionInfo(classOf[graft.functions.SketchAggregates.TopKPairs].getName, "graft_topk_pairs"),
-      (es: Seq[Expression]) => graft.functions.SketchAggregates.topKPairsBuilder(es)))
-    e.injectOptimizerRule(_ => graft.functions.VectorRewriteRule)
+    UdfRegistry.nativeFunctions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
+    e.injectOptimizerRule(_ => VectorRewriteRule)
   }
 }

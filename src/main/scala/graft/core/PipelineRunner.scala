@@ -17,7 +17,8 @@ import scala.collection.mutable
  *  - input views are ref-counted; 2nd reference => auto-persist
  *    (:69-72 → JobContext.scala:74-85);
  *  - validation-run mode truncates every output via limit(n) (:78);
- *  - per-action metrics (row count / schema / estimated size / time) (:151-187);
+ *  - per-action metrics (row count / schema / estimated size / time, plus
+ *    the actor's own `collectMetrics` pairs) (:151-187);
  *  - debug staging dumps action outputs as csv (:215-240);
  *  - cache cleanup per job (:243-258).
  */
@@ -25,7 +26,8 @@ final class PipelineRunner(pipelineCtx: PipelineContext = PipelineContext()) {
 
   final case class ActionMetrics(
       job: String, action: String, rowCount: Option[Long], schema: String,
-      estimatedSizeBytes: Option[BigInt], executeTimeMs: Long, status: String)
+      estimatedSizeBytes: Option[BigInt], executeTimeMs: Long, status: String,
+      actorMetrics: Seq[(String, String)] = Seq.empty)
 
   private val _metrics = mutable.ArrayBuffer.empty[ActionMetrics]
   def metrics: Seq[ActionMetrics] = _metrics.toSeq
@@ -105,9 +107,11 @@ final class PipelineRunner(pipelineCtx: PipelineContext = PipelineContext()) {
         case c => c.toString
       } + "\""
       val rows = _metrics.map { m =>
+        val actor = m.actorMetrics.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
         s"""{"job": ${q(m.job)}, "action": ${q(m.action)}, "rowCount": ${m.rowCount.getOrElse(-1L)},
            | "schema": ${q(m.schema)}, "estimatedSizeBytes": ${m.estimatedSizeBytes.getOrElse(BigInt(-1))},
-           | "executeTimeMs": ${m.executeTimeMs}, "status": ${q(m.status)}}""".stripMargin.replace("\n", "")
+           | "executeTimeMs": ${m.executeTimeMs}, "status": ${q(m.status)},
+           | "actorMetrics": $actor}""".stripMargin.replace("\n", "")
       }.mkString("[", ",", "]")
       val file = dir.resolve(s"metrics-$pipelineName-${System.currentTimeMillis()}.json")
       java.nio.file.Files.write(file, rows.getBytes("UTF-8"))
@@ -189,7 +193,7 @@ final class PipelineRunner(pipelineCtx: PipelineContext = PipelineContext()) {
           val rows = df.count()
           val size = scala.util.Try(BigInt(df.queryExecution.optimizedPlan.stats.sizeInBytes.toString)).toOption
           _metrics += ActionMetrics(job.name, action.name, Some(rows), df.schema.toDDL,
-            size, System.currentTimeMillis() - t0, status)
+            size, System.currentTimeMillis() - t0, status, action.actor.collectMetrics(df))
           stage(job, action, df, ctx)
         } finally if (!wasCached) df.unpersist()
       case Some(df) if !df.isStreaming =>

@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /**
  * System UDFs: binary decode + COMP-3 (IBM packed-decimal) support.
@@ -91,52 +93,51 @@ object UdfRegistry {
   /** Contract for user-supplied UDF bundles registered per pipeline. */
   trait UdfProvider { def register(prefix: String, spark: SparkSession): Unit }
 
+  /** The native SQL functions: (SQL name, expression class, builder).
+   *  The one list both [[registerSystemUdfs]] and [[graft.GraftExtensions]]
+   *  register from. */
+  val nativeFunctions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = {
+    import SketchAggregates._
+    import VectorExpressions.{ArrayDotProduct, ArrayL2Norm}
+    Seq(
+      // codegen'd vector math
+      ("vec_dot", classOf[ArrayDotProduct], es => ArrayDotProduct(es(0), es(1))),
+      ("vec_norm", classOf[ArrayL2Norm], es => ArrayL2Norm(es.head)),
+      // N-ary Z-order key (trailing integer literal = per-dim bits)
+      ("zorder_key", classOf[ZOrderExpression.ZOrderKey], ZOrderExpression.sqlBuilder),
+      // mergeable sketch aggregates
+      ("graft_hll", classOf[HllDistinct], hllBuilder),
+      ("graft_kll", classOf[KllQuantiles], kllBuilder),
+      ("graft_hll_state", classOf[HllState], hllStateBuilder),
+      ("graft_hll_merge", classOf[HllMergeEstimate], hllMergeBuilder),
+      ("graft_kll_state", classOf[KllState], kllStateBuilder),
+      ("graft_kll_merge", classOf[KllMergeQuantiles], kllMergeBuilder),
+      ("graft_bloom_state", classOf[BloomState], bloomStateBuilder),
+      ("graft_bloom_merge", classOf[BloomMergeState], bloomMergeBuilder),
+      ("graft_bloom_contains", classOf[BloomContains], bloomContainsBuilder),
+      ("graft_cms_state", classOf[CmsState], cmsStateBuilder),
+      ("graft_cms_merge", classOf[CmsMergeState], cmsMergeBuilder),
+      ("graft_cms_count", classOf[CmsCount], cmsCountBuilder),
+      ("graft_bottomk", classOf[BottomKSample], bottomKBuilder),
+      ("graft_topk_pairs", classOf[TopKPairs], topKPairsBuilder))
+  }
+
+  /** Register the byte UDFs, [[nativeFunctions]] and [[VectorRewriteRule]]
+   *  on `spark`. A name the session already resolves is left as it is, so
+   *  repeated registration on a shared session replaces nothing. */
   def registerSystemUdfs(spark: SparkSession): Unit = {
-    spark.udf.register("bytes_to_hex", udf((b: Array[Byte]) => Decoder.bytesToHex(b)))
-    spark.udf.register("bytes_to_string",
-      udf((b: Array[Byte], cs: String) => Decoder.bytesToString(b, cs)))
-    spark.udf.register("com3_to_double",
-      udf((b: Array[Byte], scale: Int) => Decoder.com3ToDouble(b, scale)))
-    spark.udf.register("com3_to_int", udf((b: Array[Byte]) => Decoder.com3ToInt(b)))
-    spark.udf.register("binary_split",
-      udf((b: Array[Byte], d: Array[Byte]) => Decoder.binarySplit(b, d)))
-    // native codegen'd vector expressions, exposed to SQL
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "vec_dot",
-      es => VectorExpressions.ArrayDotProduct(es(0), es(1)))
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "vec_norm",
-      es => VectorExpressions.ArrayL2Norm(es.head))
-    // mergeable sketch aggregates (HyperLogLog distinct, KLL quantiles)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_hll",
-      SketchAggregates.hllBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_kll",
-      SketchAggregates.kllBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_hll_state",
-      SketchAggregates.hllStateBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_hll_merge",
-      SketchAggregates.hllMergeBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_kll_state",
-      SketchAggregates.kllStateBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_kll_merge",
-      SketchAggregates.kllMergeBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_bloom_state",
-      SketchAggregates.bloomStateBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_bloom_merge",
-      SketchAggregates.bloomMergeBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_bloom_contains",
-      SketchAggregates.bloomContainsBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_cms_state",
-      SketchAggregates.cmsStateBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_cms_merge",
-      SketchAggregates.cmsMergeBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_cms_count",
-      SketchAggregates.cmsCountBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_bottomk",
-      SketchAggregates.bottomKBuilder)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_topk_pairs",
-      SketchAggregates.topKPairsBuilder)
-    // N-ary Z-order key (trailing integer literal = per-dim bits)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "zorder_key",
-      ZOrderExpression.sqlBuilder)
+    val registry = org.apache.spark.sql.GraftSqlBridge.functionRegistry(spark)
+    def absent(name: String) = !registry.functionExists(FunctionIdentifier(name))
+    val byteUdfs = Seq(
+      "bytes_to_hex" -> udf((b: Array[Byte]) => Decoder.bytesToHex(b)),
+      "bytes_to_string" -> udf((b: Array[Byte], cs: String) => Decoder.bytesToString(b, cs)),
+      "com3_to_double" -> udf((b: Array[Byte], scale: Int) => Decoder.com3ToDouble(b, scale)),
+      "com3_to_int" -> udf((b: Array[Byte]) => Decoder.com3ToInt(b)),
+      "binary_split" -> udf((b: Array[Byte], d: Array[Byte]) => Decoder.binarySplit(b, d)))
+    for ((name, f) <- byteUdfs if absent(name)) spark.udf.register(name, f)
+    for ((name, cls, builder) <- nativeFunctions if absent(name))
+      registry.registerFunction(FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder)
     // HOF-vector-math -> native-expression optimizer rewrite (idempotent add)
     if (!spark.experimental.extraOptimizations.contains(VectorRewriteRule))
       spark.experimental.extraOptimizations =

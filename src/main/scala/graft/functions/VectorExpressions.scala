@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -146,6 +147,17 @@ object VectorExpressions {
     }
     override def dataType: DataType = crankType
     override def nullable: Boolean = true
+    override def checkInputDataTypes(): TypeCheckResult =
+      (first.dataType, second.dataType, third.dataType) match {
+        case (ArrayType(FloatType | DoubleType, _), DoubleType, ArrayType(StructType(Array(
+            StructField(_, IntegerType | LongType, _, _),
+            StructField(_, ArrayType(FloatType | DoubleType, _), _, _),
+            StructField(_, DoubleType, _, _))), _)) => TypeCheckResult.TypeCheckSuccess
+        case (v, vv, cents) => TypeCheckResult.TypeCheckFailure(
+          "cell_argmin expects (array<float|double>, double, " +
+            "array<struct<crank: int|bigint, cv: array<float|double>, cc: double>>), " +
+            s"got (${v.simpleString}, ${vv.simpleString}, ${cents.simpleString})")
+      }
     override protected def withNewChildrenInternal(
         f: Expression, s: Expression, t: Expression): Expression =
       copy(first = f, second = s, third = t)

@@ -532,17 +532,19 @@ object Similarity {
    *  tier.
    *
    *  The argmin is IN-ROW (r17): the centroid frame rides one broadcast
-   *  1-row array and each corpus row picks its cell by an in-row
-   *  array_sort over struct(dist, crank) — [[ivfProbeStateless]]'s
-   *  routing device at nprobe = 1. The previous [[rankCells]] form
+   *  1-row array and each corpus row picks its cell with the codegen'd
+   *  [[graft.functions.VectorExpressions.CellArgmin]] loop — the
+   *  (dist, crank) minimum that [[ivfProbeStateless]]'s in-row
+   *  array_sort routing picks at nprobe = 1. The previous [[rankCells]] form
    *  shuffled corpus × K rows (each carrying the 64-double vector) into
    *  a per-id rank window just to keep one of the K — at corpus scale
    *  that is a K-times-corpus exchange for a map-side decision (guide
-   *  §2.3/§2.4: remove the shuffle outright). Distance expression and
-   *  (dist, crank) tie-break are textually [[rankCells]]' — vec_dot IS
-   *  [[graft.functions.VectorExpressions.ArrayDotProduct]], so doubles
-   *  and therefore assignments are bit-identical (the oracle gate and
-   *  MlSpec's probe-parity pins grade it). */
+   *  §2.3/§2.4: remove the shuffle outright). CellArgmin evaluates
+   *  [[rankCells]]' distance expression with
+   *  [[graft.functions.VectorExpressions.ArrayDotProduct]]'s
+   *  left-to-right accumulation and the same (dist, crank) tie-break, so
+   *  doubles and therefore assignments are bit-identical (the oracle
+   *  gate and MlSpec's rank-window and probe-parity pins grade it). */
   def ivfAssignments(corpus: DataFrame, centroids: DataFrame,
                      idCol: String, vecCol: String): DataFrame = {
     val centArr = centroids.agg(
@@ -602,9 +604,6 @@ object Similarity {
   def ivfProbeStateless(queries: DataFrame, centroids: DataFrame,
                         assignments: DataFrame, idCol: String, vecCol: String,
                         k: Int, nprobe: Int = 2): DataFrame = {
-    // the routing expression references vec_dot by SQL name (it runs
-    // inside a SQL lambda, out of the Column API's reach)
-    graft.functions.UdfRegistry.registerSystemUdfs(queries.sparkSession)
     val index = assignments.select(col("crank"), col("id").as("neighbor_id"),
       col("v").as("cv2"), col("vv").as("cvv"))
     // crank is unique, so the default lexicographic struct sort pins the
@@ -617,15 +616,15 @@ object Similarity {
     // (qvv + cc) - (2·dot) is the oracle's exact expression shape, so the
     // in-row sort orders cells identically to the arank window
     val routed = q.crossJoin(broadcast(centArr))
-      .withColumn("probe", expr(
-        "slice(array_sort(transform(cents, c -> " +
-          s"struct(qvv + c.cc - 2 * vec_dot(qv, c.cv) AS d, c.crank AS crank))), 1, $nprobe)"))
+      .withColumn("probe", slice(array_sort(transform(col("cents"), c =>
+        struct((col("qvv") + c("cc") - lit(2) * dot(col("qv"), c("cv"))).as("d"),
+          c("crank").as("crank")))), 1, nprobe))
       .select(col("query_id"), col("qv"), col("qvv"),
         explode(col("probe.crank")).as("crank"))
     val scored = routed.join(index, Seq("crank"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_u", expr(
-        "cast(round(round(vec_dot(qv, cv2) / (sqrt(qvv) * sqrt(cvv)), 6) * 1000000) AS BIGINT)"))
+      .withColumn("cos_u", round(round(dot(col("qv"), col("cv2")) /
+        (sqrt(col("qvv")) * sqrt(col("cvv"))), 6) * lit(1000000)).cast("bigint"))
     scored.groupBy(col("query_id"))
       .agg(graft.functions.SketchAggregates
         .topKPairs(col("cos_u"), col("neighbor_id"), k).as("tk"))
@@ -730,11 +729,9 @@ object Similarity {
    *  DEGENERATE index (K ~ 1e5 cells after runaway splits) — and it
    *  would be rebuilt per consumer. Above the ceiling [[filterCranks]]
    *  falls back to a broadcast semi/anti join against the id list (the
-   *  pre-census shape, results identical). MlSpec exercises the
-   *  fallback at K > the ceiling against the literal path's output
-   *  (via the sys-prop override — test device only). */
-  private[ml] def maxInCrankLiterals: Int =
-    sys.props.get("graft.census.inMax").map(_.toInt).getOrElse(1000)
+   *  pre-census shape, results identical — MlSpec runs both paths on
+   *  the same input). */
+  private[graft] val MaxInCrankLiterals = 1000
 
   /** `crank ∈ ids` over `df` as a broadcast-free codegen'd predicate
    *  (false for the empty set). Literal values are narrowed to the
@@ -752,34 +749,43 @@ object Similarity {
     }
 
   /** KEEP (semi) or DROP (anti) the rows whose `name` column falls in
-   *  `ids`: the codegen'd `isin` literal predicate up to
-   *  [[MaxInCrankLiterals]] ids, a broadcast semi/anti join over the id
-   *  list beyond it. The ids came off the driver-collected census, so
-   *  the local-relation build is census-sized either way; values are
-   *  cast to the column's own type so the join stays cast-free.
-   *
-   *  The two paths must be RESULT-IDENTICAL including on NULL keys (the
-   *  crank column is non-null by assignment invariant, but the helper
-   *  must not depend on it): `filter(!isin)` drops a NULL row (the
-   *  predicate evaluates to NULL) while a bare left_anti would keep it
-   *  (NULL never matches the join condition) — so the anti branch
-   *  carries an explicit isNotNull conjunct. The semi side agrees for
-   *  free (NULL matches neither `isin` nor the equi-join). */
+   *  `ids`: [[filterCranksIn]] up to [[MaxInCrankLiterals]] ids,
+   *  [[filterCranksJoin]] beyond it. The two paths must be
+   *  RESULT-IDENTICAL including on NULL keys (the crank column is
+   *  non-null by assignment invariant, but the helper must not depend
+   *  on it). */
   private[graft] def filterCranks(df: DataFrame, name: String, ids: Seq[Long],
                                   keep: Boolean): DataFrame =
-    if (ids.size <= maxInCrankLiterals) {
-      val p = inCranks(df, name, ids)
-      df.filter(if (keep) p else !p)
-    } else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val sel = ids.toDF("__crank_sel_")
-        .select(col("__crank_sel_").cast(df.schema(name).dataType)
-          .as("__crank_sel_"))
-      val in = if (keep) df else df.filter(col(name).isNotNull)
-      in.join(broadcast(sel), in(name) === sel("__crank_sel_"),
-        if (keep) "left_semi" else "left_anti")
-    }
+    if (ids.size <= MaxInCrankLiterals) filterCranksIn(df, name, ids, keep)
+    else filterCranksJoin(df, name, ids, keep)
+
+  /** [[filterCranks]] as the codegen'd `isin` literal predicate. */
+  private[graft] def filterCranksIn(df: DataFrame, name: String, ids: Seq[Long],
+                                    keep: Boolean): DataFrame = {
+    val p = inCranks(df, name, ids)
+    df.filter(if (keep) p else !p)
+  }
+
+  /** [[filterCranks]] as a broadcast semi/anti join over the id list.
+   *  The ids came off the driver-collected census, so the
+   *  local-relation build is census-sized; values are cast to the
+   *  column's own type so the join stays cast-free. `filter(!isin)`
+   *  drops a NULL row (the predicate evaluates to NULL) while a bare
+   *  left_anti would keep it (NULL never matches the join condition) —
+   *  so the anti branch carries an explicit isNotNull conjunct. The semi
+   *  side agrees for free (NULL matches neither `isin` nor the
+   *  equi-join). */
+  private[graft] def filterCranksJoin(df: DataFrame, name: String, ids: Seq[Long],
+                                      keep: Boolean): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val sel = ids.toDF("__crank_sel_")
+      .select(col("__crank_sel_").cast(df.schema(name).dataType)
+        .as("__crank_sel_"))
+    val in = if (keep) df else df.filter(col(name).isNotNull)
+    in.join(broadcast(sel), in(name) === sel("__crank_sel_"),
+      if (keep) "left_semi" else "left_anti")
+  }
 
   /** The split stage shared by [[ivfRebalance]] and [[ivfMaintain]]:
    *  split each `hotIds` cell of `assign` — which already carries a

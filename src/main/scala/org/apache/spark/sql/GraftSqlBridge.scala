@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -50,9 +51,8 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
 
-  /** Register a temp SQL function backed by a raw Expression builder. */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
+  /** The session's function registry, for registering native SQL
+   *  functions built from raw Expression builders. */
+  def functionRegistry(spark: SparkSession): FunctionRegistry =
     spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -145,6 +145,20 @@ class BenchSpec extends AnyFunSuite with Matchers {
     } finally f.delete()
   }
 
+  test("a truncated history file neither gates nor lands") {
+    // an unreadable record is as unknown as a foreign-regime one: it must
+    // block the landing (so the run cannot overwrite it) and gate nothing
+    val f = java.io.File.createTempFile("bench-hist-corrupt", ".json")
+    try {
+      java.nio.file.Files.write(f.toPath,
+        """{"sf":"testdata/sf0.1","jvm":{"cpus":"32"},"queries":{"q3_dis"""
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val (mismatch, hist) = Bench.readHistory(f.getPath, "testdata/sf0.1", "32")
+      mismatch shouldBe true
+      hist shouldBe empty
+    } finally f.delete()
+  }
+
   test("marker reference levels derive from the history, literals only as fallback") {
     // with a committed history, every panel member's reference IS that
     // history's value — the hard-coded literal is dead weight there, so

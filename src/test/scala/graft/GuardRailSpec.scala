@@ -9,6 +9,22 @@ class GuardRailSpec extends SparkSpec {
 
   private def ctx = new JobContext(PipelineContext())(spark)
 
+  /** The sbt build root (tests normally run from it), found by walking up
+   *  from the CWD; source scans require their directory to exist so a
+   *  non-root working directory FAILS LOUDLY instead of scanning nothing. */
+  private def sourceDir(rel: String): java.nio.file.Path = {
+    val root = Iterator.iterate(
+        java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null).take(6)
+      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
+      .getOrElse(java.nio.file.Paths.get(""))
+    val dir = root.resolve(rel)
+    require(java.nio.file.Files.isDirectory(dir),
+      s"source scan found no directory at $dir — run tests from the repo " +
+        "(or fix the anchor), don't let the guard scan nothing")
+    dir
+  }
+
   test("SqlReader rejects DML, SqlWriter rejects queries") {
     implicit val s = spark
     intercept[IllegalArgumentException] {
@@ -180,19 +196,7 @@ class GuardRailSpec extends SparkSpec {
     // the fix — but only if every ml persist goes through it: a raw
     // .persist() added later silently re-opens the leak for the actor
     // surface and any leased library caller. Fail at add time instead.
-    // anchor on the sbt build root (tests normally run from it), walking
-    // up from the CWD so a non-root working directory FAILS LOUDLY via
-    // the require below instead of silently scanning nothing
-    val root = Iterator.iterate(
-        java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
-      .takeWhile(_ != null).take(6)
-      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-      .getOrElse(java.nio.file.Paths.get(""))
-    val mlDir = root.resolve("src/main/scala/graft/ml")
-    require(java.nio.file.Files.isDirectory(mlDir),
-      s"lease-contract scan found no ml source dir at $mlDir — run tests " +
-        "from the repo (or fix the anchor), don't let the guard scan nothing")
-    val listing = java.nio.file.Files.list(mlDir)
+    val listing = java.nio.file.Files.list(sourceDir("src/main/scala/graft/ml"))
     val mlFiles =
       try listing.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
       finally listing.close()
@@ -213,6 +217,36 @@ class GuardRailSpec extends SparkSpec {
       "so the actor surface can free it at job teardown): ") {
       offenders shouldBe empty
     }
+  }
+
+  test("src/main reads no graft.* JVM system property") {
+    // engine settings are code constants or session conf: a JVM-global
+    // property is invisible to the plan, the bench record and the tests,
+    // and leaks across every session of the JVM
+    val walk = java.nio.file.Files.walk(sourceDir("src/main"))
+    val files =
+      try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      finally walk.close()
+    val read = "(sys\\.props|System\\.getProperty)[^\"]*\"graft\\.".r
+    val offenders = files.filter(_.toString.endsWith(".scala")).flatMap { p =>
+      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      read.findAllMatchIn(text).map(m =>
+        s"${p.getFileName}:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}")
+    }
+    offenders shouldBe empty
+  }
+
+  test("cell_argmin rejects mistyped inputs at analysis time") {
+    import graft.functions.VectorExpressions.cellArgmin
+    val base = spark.range(1).select(array(lit(1.0), lit(2.0)).as("v"), lit(5.0).as("vv"))
+    def cents(crank: org.apache.spark.sql.Column, cc: org.apache.spark.sql.Column) =
+      array(struct(crank.as("crank"), array(lit(1.0), lit(0.0)).as("cv"), cc.as("cc")))
+    base.select(cellArgmin(col("v"), col("vv"), cents(lit(3), lit(1.0))))
+      .head().getInt(0) shouldBe 3
+    for ((crank, cc) <- Seq((lit(3), lit(1L)), (lit("3"), lit(1.0)), (lit(3.0), lit(1.0))))
+      intercept[org.apache.spark.sql.AnalysisException] {
+        base.select(cellArgmin(col("v"), col("vv"), cents(crank, cc)))
+      }.getMessage should include("cell_argmin")
   }
 
   test("every catalog query carries an oracle (no rows-only weak checks)") {

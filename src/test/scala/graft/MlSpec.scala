@@ -188,7 +188,7 @@ class MlSpec extends SparkSpec {
     viaStars shouldBe fixed
   }
 
-  test("stars local-contraction preamble: on/off result identity, spanning-forest property") {
+  test("stars local-contraction preamble: labels equal a driver-side union-find") {
     implicit val s = spark
     import spark.implicits._
     // mixed-shape graph: a deep chain, a clique, a star, singleton pairs,
@@ -199,20 +199,22 @@ class MlSpec extends SparkSpec {
     val clique = for (a <- 0 until 12; b <- (a + 1) until 12)
       yield (5000L + a * 13L, 5000L + b * 13L)
     val star = (1 until 30).map(i => (9000L, 9000L + rnd.nextInt(500) + 1L))
-    val pairs0 = rnd.shuffle(chain ++ clique ++ star ++
-      Seq((77L, 78L), (42L, 41L))).toDF("id_a", "id_b")
-    def labels(): Set[(Long, Long)] =
-      Dedup.clusterLabelsStars(pairs0).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val withContract = labels()
-    val old = sys.props.put("graft.stars.localContract", "0")
-    val withoutContract = try labels()
-    finally old match {
-      case Some(v) => sys.props.put("graft.stars.localContract", v)
-      case None => sys.props.remove("graft.stars.localContract")
+    val edges = rnd.shuffle(chain ++ clique ++ star ++ Seq((77L, 78L), (42L, 41L)))
+    val withContract = Dedup.clusterLabelsStars(edges.toDF("id_a", "id_b")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSet
+    // reference: driver-side union-find over the same pairs, every node
+    // labelled with its component's minimum id
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = parent.get(x) match {
+      case Some(p) if p != x => val r = find(p); parent(x) = r; r
+      case _ => x
     }
-    withContract shouldBe withoutContract
-    // chain fully merged to its min whichever path ran
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    withContract shouldBe edges.flatMap { case (a, b) => Seq(a, b) }.map(n => n -> find(n)).toSet
+    // chain fully merged to its min
     withContract.filter(_._1 >= 1000L).filter(_._1 <= 1000L + 150 * 7L)
       .map(_._2) shouldBe Set(1000L)
   }
@@ -648,15 +650,14 @@ class MlSpec extends SparkSpec {
       asg8.collect().map(r => (r.getAs[Int]("crank"), r.getAs[Long]("id"))).toSet
   }
 
-  test("census selection fallback: K above the literal ceiling merges identically to the isin path") {
+  test("census selection fallback: K above the literal ceiling dissolves starved cells") {
     implicit val s = spark
     import s.implicits._
     // DEGENERATE index: 1200 cells, 1100 of them starved singletons. The
     // starved-id selection would build an 1100-literal In expression per
     // consumer (codegen-blowup territory at runaway-split K), so above
-    // maxInCrankLiterals it must ride the broadcast semi/anti-join
-    // fallback — with results identical to the literal path (exercised
-    // here via the test-only sys-prop override of the ceiling).
+    // MaxInCrankLiterals it must ride the broadcast semi/anti-join
+    // fallback (the filterCranks test pins it to the literal path).
     def vec(x: Double) = Seq(x, 1.0)
     val bigCents = (0 until 100).map(c => (c.toLong, vec(c * 1000.0)))
     val smallCents = (100 until 1200).map(c => (c.toLong, vec(c * 1000.0)))
@@ -673,14 +674,10 @@ class MlSpec extends SparkSpec {
       r._1.select("crank").collect().map(_.getLong(0)).toSet,
       r._2.select("crank", "parent_crank", "id").collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet)
+    1100 should be > Similarity.MaxInCrankLiterals
     val viaFallback = key(Similarity.ivfMerge(cents, asg, 4))
-    System.setProperty("graft.census.inMax", "100000")
-    val viaLiterals =
-      try key(Similarity.ivfMerge(cents, asg, 4))
-      finally sys.props.remove("graft.census.inMax")
-    viaFallback shouldBe viaLiterals
-    // and the dissolution actually ran: only the 100 big cells survive,
-    // every singleton row was absorbed with its lineage marked
+    // the dissolution ran: only the 100 big cells survive, every
+    // singleton row was absorbed with its lineage marked
     viaFallback._1 shouldBe (0L until 100L).toSet
     viaFallback._2.count { case (c, p, _) => c != p } shouldBe 1100
     viaFallback._2.size shouldBe asgRows.size
@@ -694,28 +691,22 @@ class MlSpec extends SparkSpec {
     // (the predicate evaluates to NULL) while a bare left_anti keeps
     // it (NULL never matches the equi-join) — the anti branch carries
     // an explicit isNotNull conjunct so the two paths stay
-    // result-identical. Paths forced via the test-only ceiling
-    // override; ids [0,600) with rows 0..999 + two NULL-key rows.
+    // result-identical. Ids [0,600) with rows 0..999 + two NULL-key rows.
     val df = ((0 until 1000).map(i => (Some(i.toLong), i.toLong)) ++
       Seq((None: Option[Long], 5000L), (None: Option[Long], 5001L)))
       .toDF("crank", "id")
     val ids = (0L until 600L).toSeq
-    def run(keep: Boolean, ceiling: String): Set[Long] = {
-      System.setProperty("graft.census.inMax", ceiling)
-      try Similarity.filterCranks(df, "crank", ids, keep)
-        .select("id").collect().map(_.getLong(0)).toSet
-      finally sys.props.remove("graft.census.inMax")
-    }
-    for (keep <- Seq(true, false)) {
-      val literal = run(keep, "100000")
-      val joined = run(keep, "1")
-      withClue(s"keep=$keep:") { joined shouldBe literal }
-    }
+    def idSet(f: org.apache.spark.sql.DataFrame): Set[Long] =
+      f.select("id").collect().map(_.getLong(0)).toSet
+    def literal(keep: Boolean) = idSet(Similarity.filterCranksIn(df, "crank", ids, keep))
+    def joined(keep: Boolean) = idSet(Similarity.filterCranksJoin(df, "crank", ids, keep))
+    for (keep <- Seq(true, false))
+      withClue(s"keep=$keep:") { joined(keep) shouldBe literal(keep) }
     // and the shared semantics are the isin ones: NULL keys match
     // neither direction — id 5000/5001 appear in NO output
-    run(keep = false, "1") should not contain 5000L
-    run(keep = false, "100000") should not contain 5000L
-    run(keep = true, "1").size + run(keep = false, "1").size shouldBe 1000
+    joined(keep = false) should not contain 5000L
+    literal(keep = false) should not contain 5000L
+    joined(keep = true).size + joined(keep = false).size shouldBe 1000
   }
 
   test("ivf rebalance: a degenerate split never leaves an empty sub-centroid cell") {

@@ -170,6 +170,27 @@ class PipelineRunnerSpec extends SparkSpec {
     json should include("\"status\": \"completed\"")
   }
 
+  test("metrics JSON carries the actor's collectMetrics pairs (plan-audit finding counts)") {
+    val dir = tmpDir("metrics_actor")
+    val runner = new PipelineRunner(PipelineContext(singleSparkSession = true,
+      metricsEnabled = true, metricsUri = Some(dir)))
+    val audit = new graft.plans.PlanAuditActor()
+    audit.init(Map("view" -> "li_pa", "failOn" -> "never"))(spark)
+    runner.run(Pipeline("mactor", Seq(Job("j", Seq(readerAction("li_pa"),
+      Action("audit", audit, Some(View("li_pa_findings")))))),
+      singleSparkSession = true))(spark)
+    runner.metrics.find(_.action == "audit").get.actorMetrics.toMap.keySet shouldBe
+      Set("findings_error", "findings_warn", "findings_info")
+    val files = new java.io.File(dir).listFiles()
+    files.length shouldBe 1
+    val rows = new com.fasterxml.jackson.databind.ObjectMapper().readTree(files.head)
+    val auditRow = (0 until rows.size).map(rows.get).find(_.get("action").asText == "audit").get
+    auditRow.get("actorMetrics").get("findings_error").asText shouldBe "0"
+    // actors without metrics of their own report an empty object
+    val readRow = (0 until rows.size).map(rows.get).find(_.get("action").asText == "read_li_pa").get
+    readRow.get("actorMetrics").size shouldBe 0
+  }
+
   test("SQL actors self-report referenced views for auto-caching") {
     val probe = new Actor {
       var cachedDuringJob = false

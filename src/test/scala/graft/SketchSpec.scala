@@ -65,6 +65,43 @@ class SketchSpec extends SparkSpec {
     ex.getMessage should include("literal")
   }
 
+  test("every native function resolves through GraftExtensions and through registerSystemUdfs") {
+    import graft.functions.UdfRegistry
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    def registered(s: SparkSession) = {
+      val registry = org.apache.spark.sql.GraftSqlBridge.functionRegistry(s)
+      UdfRegistry.nativeFunctions.map { case (name, _, _) =>
+        name -> registry.lookupFunction(FunctionIdentifier(name)) }.toMap
+    }
+    def assertAll(s: SparkSession): Unit =
+      for ((name, cls, _) <- UdfRegistry.nativeFunctions)
+        withClue(name) { s.catalog.getFunction(name).className shouldBe cls.getName }
+    UdfRegistry.nativeFunctions.map(_._1).distinct.size shouldBe
+      UdfRegistry.nativeFunctions.size
+    // registry path, on a session that resolves none of them yet
+    val fresh = spark.newSession()
+    all(registered(fresh).values) shouldBe None
+    UdfRegistry.registerSystemUdfs(fresh)
+    assertAll(fresh)
+    // a second registration on the same session replaces nothing
+    val infos = registered(fresh)
+    UdfRegistry.registerSystemUdfs(fresh)
+    for ((name, info) <- registered(fresh)) withClue(name) { info.get should be theSameInstanceAs infos(name).get }
+    // extension path: a session built with GraftExtensions on the same context
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext =
+      try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+      finally {
+        default.foreach(SparkSession.setDefaultSession)
+        active.foreach(SparkSession.setActiveSession)
+      }
+    ext should not be theSameInstanceAs(spark)
+    assertAll(ext)
+  }
+
   test("hll states persist to parquet, reload, and merge to the exact same estimate") {
     import graft.functions.SketchAggregates
     // per-shard states written as a binary column, read back in a fresh

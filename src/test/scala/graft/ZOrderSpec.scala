@@ -35,10 +35,10 @@ class ZOrderSpec extends SparkSpec {
       r.getLong(0) shouldBe exp
     }
 
-    // SQL registration via GraftExtensions' injected builder
+    // SQL registration of a raw ZOrderKey builder:
     // int literals are accepted natively (integral widening, no Cast)
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "zorder_key",
-      es => ZOrderExpression.ZOrderKey(Seq(es(0), es(1)), 4))
+    org.apache.spark.sql.GraftSqlBridge.functionRegistry(spark).createOrReplaceTempFunction(
+      "zorder_key", es => ZOrderExpression.ZOrderKey(Seq(es(0), es(1)), 4), "scala_udf")
     spark.sql("SELECT zorder_key(3, 5)").head.getLong(0) shouldBe 27L
   }
 
@@ -120,8 +120,8 @@ class ZOrderSpec extends SparkSpec {
     // SQL via the shared builder (what GraftExtensions and the registry
     // inject): a trailing INTEGER LITERAL is bits, a trailing column is a
     // third dimension
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "zorder_key",
-      ZOrderExpression.sqlBuilder)
+    org.apache.spark.sql.GraftSqlBridge.functionRegistry(spark).createOrReplaceTempFunction(
+      "zorder_key", ZOrderExpression.sqlBuilder, "scala_udf")
     Seq((3L, 5L, 1L)).toDF("a", "b", "c").createOrReplaceTempView("z3_in")
     // zorder_key(a, b, 4): literal 4 = bits -> 2-dim key of (3,5) = 27
     spark.sql("SELECT zorder_key(a, b, 4) AS k FROM z3_in").head.getLong(0) shouldBe 27L
